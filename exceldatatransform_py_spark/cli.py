@@ -464,10 +464,14 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
             raise SystemExit(
                 "snapshot replicate: --replica and --keys are required"
             )
+        # the library owns the fold default: pass the flag only when given
+        fold = (
+            {} if args.fold_versions is None
+            else {"fold_versions": args.fold_versions}
+        )
         n = snap.replicate_snapshot_changes(
             spark, args.table, args.replica,
-            keys=args.keys.split(","), app_id=args.app_id,
-            fold_versions=args.fold_versions,
+            keys=args.keys.split(","), app_id=args.app_id, **fold,
         )
         print(f"applied {n} source versions to {args.replica}",
               file=sys.stderr)
@@ -591,7 +595,8 @@ def main(argv: list[str] | None = None) -> None:
                     help="replicate: txn-ledger writer id (the cursor)")
     sn.add_argument("--fold-versions", type=int, default=None,
                     help="replicate: drain up to N consecutive "
-                         "row-change versions as one commit")
+                         "row-change versions as one commit (default: "
+                         "the library's; 1 = one commit per version)")
     sn.add_argument("--old", default=None, help="rename: current column name")
     sn.add_argument("--new", default=None, help="rename: new column name")
     sn.add_argument("--output", default=None,

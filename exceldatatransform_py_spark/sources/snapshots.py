@@ -59,7 +59,7 @@ import os
 import shutil
 import uuid
 from contextlib import contextmanager
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,6 +117,23 @@ def _latest_manifest(table: str) -> dict | None:
         return None
     with open(os.path.join(vdir, names[-1])) as f:
         return json.load(f)
+
+
+def _require_latest(table: str) -> dict:
+    m = _latest_manifest(table)
+    if m is None:
+        raise FileNotFoundError(f"no versions in {table}")
+    return m
+
+
+def _parquet_files(table: str, data_dir: str) -> list[str]:
+    """The parquet files of one data directory, relative to the table
+    root and sorted."""
+    return sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(os.path.join(table, data_dir))
+        if f.endswith(".parquet")
+    )
 
 
 def _stat_encode(v):
@@ -304,24 +321,169 @@ def _bloom_probe_pairs(
     ]
 
 
-def _literal_probe_frame(spark: SparkSession, manifest: dict, col: str, values):
-    """One-row-per-value frame of probe literals CAST to the table
+def _has_bloom(m: dict, col: str) -> bool:
+    """True iff some file of manifest ``m`` carries a bloom on ``col``."""
+    return any(col in e for e in m.get("blooms", {}).values())
+
+
+def _literal_probe_pairs(
+    spark: SparkSession, m: dict, col: str, values
+) -> list[tuple] | None:
+    """Bloom bit tuples of literal probe ``values`` CAST to the table
     column's committed type — xxhash64 is type-sensitive, so probing
     an int column with a Python int defaulting to long would miss.
-    Returns None for non-primitive column types."""
+    None (no bloom consultation) when no file carries a bloom on
+    ``col`` or the column type is not primitive."""
+    if not values or not _has_bloom(m, col):
+        return None
     typ = next(
         (
             f.get("type")
-            for f in manifest.get("schema", {}).get("fields", [])
+            for f in m.get("schema", {}).get("fields", [])
             if f.get("name") == col
         ),
         None,
     )
-    if not isinstance(typ, str) or not values:
+    if not isinstance(typ, str):
         return None
-    return spark.createDataFrame(
+    frame = spark.createDataFrame(
         [(str(v),) for v in values], "v string"
     ).select(F.col("v").cast(typ).alias(col))
+    return _bloom_probe_pairs(frame, col)
+
+
+# ---------------------------------------------------------------------------
+# File pruning: ONE per-file predicate serves every file-level commit
+# (pruned merge, range / DV delete, CDC apply), the point read and the
+# rebase check on files a concurrent winner added. Callers describe
+# what they probe per key column (``_Probe``); the pruner decides from
+# the manifest's cached min/max / NULL counts / blooms which files MAY
+# hold a matching row. Every test is a superset test, so pruning is
+# sound: a false positive costs an unchanged rewrite or an extra scan,
+# never a wrong row.
+# ---------------------------------------------------------------------------
+
+
+class _Probe(NamedTuple):
+    """What a commit probes ONE key column with: the non-NULL key
+    bounds (``lo`` None = no non-NULL probe key), whether NULL keys
+    are probed (NULL-safe equality matches them to NULL keys), the
+    probe keys' bloom bit tuples (None = no bloom consultation) and,
+    for point reads, the literal values — tested one by one against
+    each file's range instead of through [lo, hi]."""
+
+    col: str
+    lo: object = None
+    hi: object = None
+    nulls: bool = False
+    pairs: list | None = None
+    values: list | None = None
+
+
+def _key_probes(
+    df: DataFrame, keys: Sequence[str], m: dict
+) -> tuple[int, list[_Probe]]:
+    """Probes for every key of the probe rows ``df``: row count and
+    per-key min/max/non-NULL count in ONE aggregation pass, plus one
+    bloom-bit collection per key some file of ``m`` carries a bloom on
+    (skipped for an empty ``df``). Returns ``(row count, probes)``."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for j, k in enumerate(keys):
+        aggs += [
+            F.min(k).alias(f"lo{j}"),
+            F.max(k).alias(f"hi{j}"),
+            F.count(k).alias(f"nn{j}"),
+        ]
+    b = df.agg(*aggs).first()
+    return b["n"], [
+        _Probe(
+            k, b[f"lo{j}"], b[f"hi{j}"], b["n"] > b[f"nn{j}"],
+            _bloom_probe_pairs(df, k) if b["n"] and _has_bloom(m, k) else None,
+        )
+        for j, k in enumerate(keys)
+    ]
+
+
+def _prune_files(
+    table: str,
+    m: dict,
+    probes: Sequence[_Probe],
+    files: list[str] | None = None,
+    footer: bool = True,
+) -> tuple[list[str], list[str], dict]:
+    """Split ``files`` (default: every file of manifest ``m``) into
+    ``touched`` — files that MAY hold a row matching ``probes`` — and
+    ``inherited`` ones that provably hold none. A file is excluded
+    when ANY key excludes it. Per key:
+
+    * a non-NULL probe key may match iff the file's min/max overlaps
+      [lo, hi] (point reads: holds one of ``values``) and the file's
+      bloom, when there is one, cannot rule out every probe key;
+    * a NULL probe key may match iff the file's NULL count is positive
+      or unknown — min/max never see NULLs.
+
+    Stats come from the manifest cache. Only the FIRST key falls back
+    to footer reads, and only with ``footer`` (a point read commits
+    nothing, so it keeps to the cache); a key without cached stats
+    that may not read the footer cannot exclude. Unknown ranges count
+    as "may match".
+
+    Also returns the refreshed per-file stats ({rel: per-column stats
+    with the first key's ``[lo, hi, null count]``}), so a commit can
+    record footer-derived stats and the next one prunes from the
+    manifest alone."""
+    stats = m.get("stats", {})
+    blooms = m.get("blooms", {})
+    touched: list[str] = []
+    inherited: list[str] = []
+    refreshed: dict = {}
+    for rel in _manifest_files(table, m) if files is None else files:
+        path = os.path.join(table, rel)
+        may = True
+        for j, p in enumerate(probes):
+            cached = stats.get(rel, {}).get(p.col)
+            first = j == 0 and footer
+            if cached is None and not first:
+                continue
+            if cached is not None:
+                mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
+            else:
+                mm = _footer_minmax(path, p.col)
+            # pre-upgrade manifests hold 2-element [lo, hi] stats
+            if cached is not None and len(cached) >= 3:
+                nc = cached[2]
+            else:
+                nc = _footer_nullcount(path, p.col) if first else None
+            if j == 0 and mm is not None:
+                lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
+                if lo_e is not None and hi_e is not None:
+                    refreshed[rel] = dict(
+                        stats.get(rel, {}), **{p.col: [lo_e, hi_e, nc]}
+                    )
+            try:
+                if p.values is not None:
+                    may_nonnull = mm is None or any(
+                        v is not None and mm[0] <= v <= mm[1]
+                        for v in p.values
+                    )
+                else:
+                    may_nonnull = p.lo is not None and (
+                        mm is None or not (mm[1] < p.lo or mm[0] > p.hi)
+                    )
+            except TypeError:  # incomparable literal: stay conservative
+                may_nonnull = True
+            if may_nonnull and p.pairs is not None:
+                hexmap = blooms.get(rel, {}).get(p.col)
+                if hexmap is not None and not _bloom_may_contain(
+                    hexmap, p.pairs
+                ):
+                    may_nonnull = False
+            may_null = p.nulls and (nc is None or nc > 0)
+            if not (may_nonnull or may_null):
+                may = False
+                break
+        (touched if may else inherited).append(rel)
+    return touched, inherited, refreshed
 
 
 def snapshot_count(table: str, version: int | None = None) -> int:
@@ -657,11 +819,7 @@ def _commit(
         manifest["constraints"] = effective
     if txn is not None:
         manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
-    rel_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(os.path.join(table, data_dir))
-        if f.endswith(".parquet")
-    )
+    rel_files = _parquet_files(table, data_dir)
     manifest["rows"] = _collect_rows(table, rel_files)
     if stats_cols:
         manifest["stats"] = _collect_stats(table, rel_files, stats_cols)
@@ -716,111 +874,54 @@ def snapshot_write(
     )
 
 
-def _commit_layout_rewrite(
+def _live_rows(table: str, m: dict, rel: str) -> int:
+    """Live row count of file ``rel`` of manifest ``m``: the cached
+    row count (a footer read for pre-upgrade manifests) minus its
+    deletion-vector cardinality — metadata only."""
+    n = m.get("rows", {}).get(rel)
+    if n is None:
+        n = _footer_rows(os.path.join(table, rel))
+    return n - m.get("dv", {}).get(rel, {}).get("count", 0)
+
+
+def _compact_files(
     spark: SparkSession,
     table: str,
-    base: dict,
-    df: DataFrame,
-    kind: str,
-    touched: list[str],
+    latest: dict,
+    files: list[str],
+    target_rows_per_file: int,
     stats_cols: Sequence[str],
     bloom_cols: Sequence[str],
     rebase: bool,
     max_rebase: int,
 ) -> int:
-    """Commit a LAYOUT-ONLY rewrite (compact / zorder): ``df`` holds
-    exactly the live rows of ``touched`` (DVs already applied by the
-    DV-aware read), staged under a unique dir and committed as a
-    file-level manifest that replaces ``touched`` and inherits every
-    other file from the commit parent.
+    """Rewrite ``files`` of ``latest`` (deletion vectors materialized
+    away) into files of about ``target_rows_per_file`` rows, sized from
+    the manifest's cached row counts — no counting job. ``coalesce``
+    when shrinking (narrow, no shuffle); ``repartition`` only when
+    growing the file count (oversized files are being rewritten
+    anyway).
 
-    Disjoint-commit resolution: a layout rewrite changes NO rows, so
-    replaying it onto a winner is sound whenever the winner left every
-    touched file intact — bytes and DV entry (a winner-grown DV would
-    be materialized back to life by our rewrite) — regardless of what
-    the winner ADDED (new files are simply inherited; a layout commit
-    has no key range to collide with). That is ``_pruned_rebase_ok``
-    with the added-file check disabled (update_empty=True). At 100 TB
-    this is the difference between nightly OPTIMIZE succeeding under
-    continuous ingest and throwing away its whole rewrite on every
-    race."""
-    import time as _t
-
-    touched_set = set(touched)
-    data_dir, _ = _stage_unique(table, df, base["version"] + 1, parent=base)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(os.path.join(table, data_dir))
-        if f.endswith(".parquet")
-    )
-    new_stats = (
-        _collect_stats(table, new_files, stats_cols) if stats_cols else {}
-    )
-    new_blooms = (
-        _collect_blooms(spark, table, new_files, bloom_cols)
-        if bloom_cols
-        else {}
-    )
-    new_rows = _collect_rows(table, new_files)
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        stats_out = {
-            r: cur_stats[r] for r in inherited_cur if r in cur_stats
-        }
-        stats_out.update(new_stats)
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(new_blooms)
-        return {
-            "version": cur["version"] + 1,
-            "data_dir": data_dir,
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            "kind": kind,
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            **({"stats": stats_out} if stats_out else {}),
-            **({"blooms": blooms_out} if blooms_out else {}),
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-            "pruning": {
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-        }
-
-    def cleanup():
-        shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-
-    return _publish_with_rebase(
-        table, base, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, base, nxt, touched_set, None,
-            None, None, False, True,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    A layout rewrite changes NO rows, so it replays onto a winner
+    whenever the winner left every rewritten file intact — bytes and
+    DV entry (a winner-grown DV would be materialized back to life by
+    our rewrite) — regardless of what the winner ADDED (new files are
+    simply inherited; a layout commit has no key range to collide
+    with). At 100 TB this is the difference between nightly OPTIMIZE
+    succeeding under continuous ingest and throwing away its whole
+    rewrite on every race."""
+    df = _read_live(spark, table, latest, files)
+    n_rows = sum(_live_rows(table, latest, r) for r in files)
+    n_files = max(1, -(-n_rows // target_rows_per_file))
+    n_parts = df.rdd.getNumPartitions()
+    if n_files < n_parts:
+        df = df.coalesce(n_files)
+    elif n_files > n_parts:
+        df = df.repartition(n_files)
+    return _commit_files(
+        spark, table, latest, "compact", df=df, touched=files,
+        rewrite=True, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -836,9 +937,8 @@ def snapshot_compact(
     """OPTIMIZE analogue: commit a compacted rewrite of the latest
     version (small files from merges/streaming folded into
     evenly-sized ones) as a NEW version — rows identical, history
-    intact, old versions readable until vacuumed. ``coalesce`` when
-    shrinking (narrow, no shuffle); ``repartition`` only when growing
-    the file count (oversized files are being rewritten anyway).
+    intact, old versions readable until vacuumed. Every file is
+    rewritten; the output is sized from the manifest's row counts.
 
     Concurrency: the rewrite replays onto a winner that left every
     file of this version intact (e.g. an insert-only merge landing
@@ -847,22 +947,10 @@ def snapshot_compact(
     compaction that stays disjoint from FILE-REWRITING traffic, use
     ``snapshot_compact_small_files`` (touches only the small-file
     subset)."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    df = snapshot_read(spark, table, version=latest["version"])
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    n_parts = df.rdd.getNumPartitions()
-    if n_files < n_parts:
-        df = df.coalesce(n_files)
-    elif n_files > n_parts:
-        df = df.repartition(n_files)
-    return _commit_layout_rewrite(
-        spark, table, latest, df, "compact",
-        _manifest_files(table, latest), stats_cols, bloom_cols,
-        rebase, max_rebase,
+    latest = _require_latest(table)
+    return _compact_files(
+        spark, table, latest, _manifest_files(table, latest),
+        target_rows_per_file, stats_cols, bloom_cols, rebase, max_rebase,
     )
 
 
@@ -888,42 +976,17 @@ def snapshot_compact_small_files(
     conflict FOOTPRINT) proportional to the trickle, not the table —
     a concurrent merge that rewrites a big hot file races DISJOINTLY
     with this commit and both land (the rebase rule in
-    ``_commit_layout_rewrite``)."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    rows_map = latest.get("rows", {})
-    dv = latest.get("dv", {})
-
-    def live_rows(rel: str) -> int:
-        n = rows_map.get(rel)
-        if n is None:
-            n = _footer_rows(os.path.join(table, rel))
-        return n - dv.get(rel, {}).get("count", 0)
-
-    small = [r for r in files if live_rows(r) < target_rows_per_file]
+    ``_compact_files``)."""
+    latest = _require_latest(table)
+    small = [
+        r for r in _manifest_files(table, latest)
+        if _live_rows(table, latest, r) < target_rows_per_file
+    ]
     if len(small) < 2:
         return latest["version"]
-    sset = set(small)
-    df = _scan_minus_dv(
-        spark,
-        table,
-        [os.path.join(table, r) for r in small],
-        {r: e for r, e in dv.items() if r in sset},
-        schema=_schema_for_read(spark, latest),
-    )
-    n_rows = sum(live_rows(r) for r in small)
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    n_parts = df.rdd.getNumPartitions()
-    if n_files < n_parts:
-        df = df.coalesce(n_files)
-    elif n_files > n_parts:
-        df = df.repartition(n_files)
-    return _commit_layout_rewrite(
-        spark, table, latest, df, "compact",
-        small, stats_cols, bloom_cols, rebase, max_rebase,
+    return _compact_files(
+        spark, table, latest, small,
+        target_rows_per_file, stats_cols, bloom_cols, rebase, max_rebase,
     )
 
 
@@ -950,17 +1013,16 @@ def snapshot_optimize_zorder(
     merges) rebase instead of conflicting."""
     from exceldatatransform_py_spark.sources.writers import zorder_frame
 
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    df = snapshot_read(spark, table, version=latest["version"])
-    zed = zorder_frame(df, col_a, col_b, num_files)
-    cols = list(dict.fromkeys([col_a, col_b, *stats_cols]))
-    return _commit_layout_rewrite(
-        spark, table, latest, zed, "zorder",
-        _manifest_files(table, latest), cols, bloom_cols,
-        rebase, max_rebase,
+    latest = _require_latest(table)
+    files = _manifest_files(table, latest)
+    zed = zorder_frame(
+        _read_live(spark, table, latest, files), col_a, col_b, num_files
+    )
+    return _commit_files(
+        spark, table, latest, "zorder", df=zed, touched=files,
+        rewrite=True,
+        stats_cols=list(dict.fromkeys([col_a, col_b, *stats_cols])),
+        bloom_cols=bloom_cols, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -970,12 +1032,7 @@ def _manifest_files(table: str, manifest: dict) -> list[str]:
     directory-level manifests own every parquet in their data_dir."""
     if "files" in manifest:
         return list(manifest["files"])
-    data_dir = os.path.join(table, manifest["data_dir"])
-    return sorted(
-        os.path.join(manifest["data_dir"], f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
+    return _parquet_files(table, manifest["data_dir"])
 
 
 # ---------------------------------------------------------------------------
@@ -1046,40 +1103,94 @@ def _scan_minus_dv(
     )
 
 
-def _point_prune_files(
-    spark: SparkSession, table: str, m: dict, rel_files: list[str],
-    col: str, values: list,
-) -> list[str]:
-    """Files of manifest ``m`` that MAY contain a row with ``col`` in
-    ``values`` — min/max range test first, then the per-file bloom
-    (both sound: false positives scan extra bytes, never wrong rows)."""
-    stats = m.get("stats", {})
-    blooms = m.get("blooms", {})
-    pairs = None
-    if any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, m, col, list(values))
-        if pf is not None:
-            pairs = _bloom_probe_pairs(pf, col)
-    out = []
-    for rel in rel_files:
-        may = True
-        cached = stats.get(rel, {}).get(col)
-        if cached is not None:
-            fmin = _stat_decode(cached[0])
-            fmax = _stat_decode(cached[1])
-            try:
-                may = any(
-                    v is not None and fmin <= v <= fmax for v in values
-                )
-            except TypeError:  # incomparable literal: stay conservative
-                may = True
-        if may and pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(hexmap, pairs):
-                may = False
-        if may:
-            out.append(rel)
-    return out
+def _read_live(
+    spark: SparkSession, table: str, m: dict, rels: list[str]
+) -> DataFrame:
+    """The live rows of files ``rels`` of manifest ``m``: a field-id
+    scan with their deletion vectors subtracted — an empty frame of
+    the manifest schema when ``rels`` is empty."""
+    if not rels:
+        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
+    dv = m.get("dv", {})
+    return _scan_minus_dv(
+        spark,
+        table,
+        [os.path.join(table, r) for r in rels],
+        {r: dv[r] for r in rels if r in dv},
+        schema=_schema_for_read(spark, m),
+    )
+
+
+def _range_probes(
+    spark: SparkSession, m: dict, col: str, lo, hi
+) -> list[_Probe]:
+    """The probe of a delete of ``col BETWEEN lo AND hi`` (a NULL key
+    never matches). A POINT delete (lo == hi) consults per-file
+    blooms: on an unclustered key every file's min/max range covers
+    the key, but the bloom rules out files that provably don't hold
+    it."""
+    pairs = _literal_probe_pairs(spark, m, col, [lo]) if lo == hi else None
+    return [_Probe(col, lo, hi, pairs=pairs)]
+
+
+def _delete_predicate(col: str, lo, hi, extra_predicate: str | None):
+    """``col BETWEEN lo AND hi`` (narrowed by ``extra_predicate``, a
+    SQL boolean) with NULL read as FALSE: a NULL key never matches a
+    BETWEEN, so NULL-carrying rows are only ever retained."""
+    doomed = F.col(col).between(F.lit(lo), F.lit(hi))
+    if extra_predicate is not None:
+        doomed = doomed & F.coalesce(F.expr(extra_predicate), F.lit(False))
+    return F.coalesce(doomed, F.lit(False))
+
+
+def _write_dv(
+    spark: SparkSession, table: str, m: dict, touched: list[str], hit
+) -> dict:
+    """Write the deletion vectors of a merge-on-read delete over the
+    ``touched`` files of manifest ``m``. ``hit`` narrows a scan of
+    those files, tagged with each row's ``rel`` file and ``pos``
+    position, to the rows being deleted. The files' prior positions
+    are folded in (union), so each touched file's fresh sidecar is its
+    COMPLETE deletion vector and cardinalities never double-count.
+
+    Returns {touched file: new DV entry, or None when the file has no
+    deleted position} — empty when nothing is deleted."""
+    if not touched:
+        return {}
+    rs = _schema_for_read(spark, m)
+    scan = (spark.read.schema(rs) if rs is not None else spark.read).parquet(
+        *[os.path.join(table, r) for r in touched]
+    )
+    hits = hit(
+        scan.withColumn("rel", _rel_file_expr()).withColumn(
+            "pos", F.col("_metadata.row_index")
+        )
+    ).select("rel", "pos")
+    tset = set(touched)
+    old = {r: e for r, e in m.get("dv", {}).items() if r in tset}
+    old_rows = _dv_rows(spark, table, old)
+    if old_rows is not None:
+        prior = old_rows.filter(F.col("rel").isin(list(old)))
+        hits = hits.join(prior, ["rel", "pos"], "left_anti").unionByName(prior)
+    counts = {
+        r["rel"]: int(r["n"])
+        for r in hits.groupBy("rel")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    if not counts:
+        return {}
+    dv_dir = os.path.join(
+        _DVDIR, f"v{m['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
+    )
+    n_out = max(1, sum(counts.values()) // 4_000_000)
+    hits.repartition(n_out, "rel").write.mode("errorifexists").parquet(
+        os.path.join(table, dv_dir)
+    )
+    return {
+        r: {"dir": dv_dir, "count": counts[r]} if r in counts else None
+        for r in touched
+    }
 
 
 def snapshot_read(
@@ -1120,33 +1231,21 @@ def snapshot_read(
     if v not in by_v:
         raise ValueError(f"version {v} not in {sorted(by_v)}")
     m = by_v[v]
-    dv = m.get("dv", {})
+    if point_filter is not None:
+        col, values = point_filter
+        values = list(values)
+        rels, _, _ = _prune_files(table, m, [_Probe(
+            col, values=values,
+            pairs=_literal_probe_pairs(spark, m, col, values),
+        )], footer=False)
+        return _read_live(spark, table, m, rels).filter(
+            F.col(col).isin(values)
+        )
     # field-id read schema: the version's manifest schema resolves
     # columns by stable id, so files written before a RENAME read
     # under this version's names (and time travel to a pre-rename
     # version reads post-rename files under the OLD names)
     rs = _schema_for_read(spark, m)
-
-    def _plain(files):
-        reader = spark.read.schema(rs) if rs is not None else spark.read
-        return reader.parquet(*files)
-
-    if point_filter is not None:
-        col, values = point_filter
-        rels = _point_prune_files(
-            spark, table, m, _manifest_files(table, m), col, list(values)
-        )
-        files = [os.path.join(table, r) for r in rels]
-        if not files:
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(m["schema"])
-            )
-        scan = (
-            _scan_minus_dv(spark, table, files, dv, schema=rs)
-            if dv
-            else _plain(files)
-        )
-        return scan.filter(F.col(col).isin(list(values)))
     if "files" not in m:
         files = [os.path.join(table, m["data_dir"])]
     else:
@@ -1155,9 +1254,7 @@ def snapshot_read(
         return spark.createDataFrame(
             [], T.StructType.fromJson(m["schema"])
         )
-    if dv:
-        return _scan_minus_dv(spark, table, files, dv, schema=rs)
-    return _plain(files)
+    return _scan_minus_dv(spark, table, files, m.get("dv", {}), schema=rs)
 
 
 def snapshot_merge_update(
@@ -1363,23 +1460,19 @@ def _schema_for_read(spark: SparkSession, m: dict):
 
 
 def _stage_unique(
-    table: str, df: DataFrame, version: int, parent: dict | None = None
+    table: str, df: DataFrame, parent: dict
 ) -> tuple[str, dict]:
     """Stage a file-level commit's rewritten files under a globally
     UNIQUE directory name — protocol-agnostic (no rename/link:
     object-store-safe) and collision-free under any concurrency, so a
     conflicted file-level commit can REBASE onto the new latest
     without re-staging its parquet. Field IDs are attached from
-    ``parent`` (default: the table's latest manifest) before the
-    write. Returns ``(data_dir, schema_json)`` — the schema as staged,
-    ids included. The manifest's explicit "files" list is
-    authoritative; ``vacuum`` sweeps never-published unique dirs past
-    the retention horizon."""
-    if parent is None:
-        ms = _manifests(table)
-        parent = ms[-1] if ms else None
+    ``parent`` before the write. Returns ``(data_dir, schema_json)`` —
+    the schema as staged, ids included. The manifest's explicit
+    "files" list is authoritative; ``vacuum`` sweeps never-published
+    unique dirs past the retention horizon."""
     df = _attach_field_ids(df, parent, floor=_last_field_id(table, parent))
-    data_dir = f"d{version:05d}-{uuid.uuid4().hex[:8]}"
+    data_dir = f"d{parent['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
     df.write.mode("errorifexists").parquet(os.path.join(table, data_dir))
     return data_dir, df.schema.jsonValue()
 
@@ -1388,27 +1481,25 @@ def _pruned_rebase_ok(
     table: str,
     base: dict,
     cur: dict,
-    touched_set: set,
-    prune_col: str,
-    lo,
-    hi,
-    nulls_in_updates: bool,
-    update_empty: bool,
+    touched: set,
+    probes: Sequence[_Probe],
 ) -> bool:
-    """True iff a pruned commit computed against manifest ``base`` can
-    be replayed verbatim onto ``cur`` (a later version that won the
+    """True iff a file-level commit computed against manifest ``base``
+    can be replayed verbatim onto ``cur`` (a later version that won the
     race) — the disjoint-writer rebase real table formats run instead
     of failing every concurrent commit. Sound conditions:
 
     * same schema and same CHECK constraints (else semantics changed);
-    * every file we rewrote still exists in ``cur`` with identical
+    * every file we read still exists in ``cur`` with identical
       deletion vectors (the winner did not touch our write set);
-    * no file the winner ADDED can hold a key matching our updates
-      (same stats superset-test as pruning itself — a winner-inserted
-      row inside our key range would have needed our update). Files
-      the winner merely REMOVED are fine: they drop out of the
-      inherited list, and files that survived from ``base`` were
-      already proven non-matching by our own pruning pass.
+    * no file the winner ADDED may hold a row matching ``probes`` —
+      the same per-file predicate as pruning itself
+      (``_prune_files``): a winner-inserted row inside our key range
+      would have needed our commit. Files the winner merely REMOVED
+      are fine: they drop out of the inherited list, and files that
+      survived from ``base`` were already proven non-matching by our
+      own pruning pass. Layout rewrites pass no probes — they change
+      no rows, so whatever the winner added is simply inherited.
     """
     def sig(m):  # nullability may legally drift across merge commits
         return [
@@ -1420,31 +1511,17 @@ def _pruned_rebase_ok(
         return False
     if cur.get("constraints", {}) != base.get("constraints", {}):
         return False
-    cur_files = set(_manifest_files(table, cur))
-    if not touched_set <= cur_files:
+    cur_files = _manifest_files(table, cur)
+    if not touched <= set(cur_files):
         return False
     bdv, cdv = base.get("dv", {}), cur.get("dv", {})
-    if any(bdv.get(r) != cdv.get(r) for r in touched_set):
+    if any(bdv.get(r) != cdv.get(r) for r in touched):
         return False
-    if update_empty:
+    if not probes:
         return True
     base_files = set(_manifest_files(table, base))
-    cur_stats = cur.get("stats", {})
-    for rel in cur_files - base_files:
-        cached = cur_stats.get(rel, {}).get(prune_col)
-        if cached is not None:
-            mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
-            nc = cached[2] if len(cached) >= 3 else None
-        else:
-            mm = _footer_minmax(os.path.join(table, rel), prune_col)
-            nc = _footer_nullcount(os.path.join(table, rel), prune_col)
-        may_nonnull = lo is not None and (
-            mm is None or not (mm[1] < lo or mm[0] > hi)
-        )
-        may_null = nulls_in_updates and (nc is None or nc > 0)
-        if may_nonnull or may_null:
-            return False
-    return True
+    added = [r for r in cur_files if r not in base_files]
+    return not _prune_files(table, cur, probes, added)[0]
 
 
 def _publish_with_rebase(
@@ -1457,7 +1534,7 @@ def _publish_with_rebase(
     max_rebase: int = 5,
 ) -> int:
     """Optimistic-concurrency publish loop shared by every file-level
-    commit (pruned merge, range/DV delete, compact, zorder): build the
+    commit (``_commit_files``) and metadata-only commit: build the
     manifest against ``cur`` (initially ``base``), publish; on a
     version race, if ``rebase_ok(winner)`` proves the winner's commit
     did not interact with ours, rebuild against the winner and retry
@@ -1469,9 +1546,9 @@ def _publish_with_rebase(
     attempts = 0
     while True:
         manifest = build_manifest(cur, attempts)
-        # file-level commits never mint ids, so the parent's recorded
-        # last_field_id carries forward (stamped here once for every
-        # file-level commit kind rather than in each build_manifest)
+        # the parent's recorded last_field_id carries forward, raised
+        # by any id the commit's schema minted (a widening CDC apply) —
+        # stamped here once rather than in each build_manifest
         if "last_field_id" not in manifest:
             _record_last_field_id(manifest, _last_field_id(table, cur))
         try:
@@ -1485,6 +1562,155 @@ def _publish_with_rebase(
                 continue
             cleanup()
             raise
+
+
+def _commit_files(
+    spark: SparkSession,
+    table: str,
+    base: dict,
+    kind: str,
+    *,
+    df: DataFrame | None = None,
+    touched: Sequence[str] = (),
+    rewrite: bool = False,
+    dv: dict | None = None,
+    stats: dict | None = None,
+    stats_cols: Sequence[str] = (),
+    bloom_cols: Sequence[str] = (),
+    cols: Sequence[str] = (),
+    probes: Sequence[_Probe] = (),
+    txn: tuple[str, int] | None = None,
+    rebase: bool = True,
+    max_rebase: int = 5,
+) -> int:
+    """Commit a FILE-LEVEL version on top of ``base`` — the one
+    manifest builder of every pruned merge, range / DV delete, CDC
+    apply and layout rewrite:
+
+    * ``df`` (optional) holds rows to land as new files: validated
+      against the inherited CHECK constraints (except for layout
+      rewrites, which change no rows), staged under a unique
+      directory (``_stage_unique``: a rebase replays the SAME staged
+      files at a later version), with row counts, ``stats_cols``
+      min/max/NULL stats and ``bloom_cols`` blooms collected for them;
+    * ``touched`` are the files of ``base`` the commit read. With
+      ``rewrite`` they are REPLACED by the new files (their deletion
+      vectors were applied during the read); otherwise they stay and
+      ``dv`` ({file: entry, or None to drop it}, from ``_write_dv``)
+      updates their deletion vectors;
+    * every other file is inherited by reference with its row count,
+      stats (merged with the pruner's refreshed ``stats``), bloom and
+      deletion vector; CHECK constraints carry forward;
+    * the ``pruning`` record says what the commit did: files scanned,
+      rewritten, inherited (neither scanned nor rewritten), given a
+      deletion vector and appended, and how often it rebased
+      (``cols``: the key columns it pruned on).
+
+    Published through ``_publish_with_rebase``: a commit that loses the
+    version race replays onto a winner that left every touched file
+    intact and added no file that may match ``probes``
+    (``_pruned_rebase_ok``); ``rebase=False`` re-raises the conflict
+    instead. A failed publish withdraws the staged data and sidecar
+    directories."""
+    import time as _t
+
+    dv = dv or {}
+    stats = stats or {}
+    data_dir: str | None = None
+    schema = None
+    new_files: list[str] = []
+    if df is not None:
+        if kind not in _LAYOUT_ONLY_KINDS:
+            _validate_constraints(df, base.get("constraints", {}))
+        data_dir, schema = _stage_unique(table, df, base)
+        new_files = _parquet_files(table, data_dir)
+    new_rows = _collect_rows(table, new_files)
+    new_stats = (
+        _collect_stats(table, new_files, stats_cols)
+        if new_files and stats_cols
+        else {}
+    )
+    new_blooms = (
+        _collect_blooms(spark, table, new_files, bloom_cols)
+        if new_files and bloom_cols
+        else {}
+    )
+    removed = set(touched) if rewrite else set()
+
+    def build_manifest(cur: dict, attempts: int) -> dict:
+        kept = [r for r in _manifest_files(table, cur) if r not in removed]
+        kset = set(kept)
+        cur_rows = cur.get("rows", {})
+        cur_stats = cur.get("stats", {})
+        cur_blooms = cur.get("blooms", {})
+        stats_out: dict = {}
+        for r in kept:
+            # bytes are immutable, so the winner's entries and the
+            # pruner's refreshed ones are both valid: union per column
+            st = dict(cur_stats.get(r, {}), **stats.get(r, {}))
+            if st:
+                stats_out[r] = st
+        stats_out.update(new_stats)
+        blooms_out = {r: cur_blooms[r] for r in kept if r in cur_blooms}
+        blooms_out.update(new_blooms)
+        dv_out = {r: e for r, e in cur.get("dv", {}).items() if r in kset}
+        for r, e in dv.items():
+            if e is None:
+                dv_out.pop(r, None)
+            else:
+                dv_out[r] = e
+        manifest = {
+            "version": cur["version"] + 1,
+            # commits that stage nothing reference the parent's dir —
+            # the "files" list is authoritative anyway
+            "data_dir": data_dir if data_dir is not None else cur["data_dir"],
+            "files": new_files + kept,
+            "rows": {
+                **{
+                    r: cur_rows[r]
+                    if r in cur_rows
+                    else _footer_rows(os.path.join(table, r))
+                    for r in kept
+                },
+                **new_rows,
+            },
+            "kind": kind,
+            "parent": cur["version"],
+            "ts": _t.time(),
+            "schema": schema if schema is not None else cur["schema"],
+            "stats": stats_out,
+            "pruning": {
+                **({"col": cols[0], "cols": list(cols)} if cols else {}),
+                "scanned_files": len(touched),
+                "rewritten_files": len(removed),
+                "inherited_files": len(kset.difference(touched)),
+                "dv_files": sum(e is not None for e in dv.values()),
+                "appended_files": len(new_files),
+                "rebased": attempts,
+            },
+        }
+        if blooms_out:
+            manifest["blooms"] = blooms_out
+        if dv_out:
+            manifest["dv"] = dv_out
+        if cur.get("constraints"):
+            manifest["constraints"] = cur["constraints"]
+        if txn is not None:
+            manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
+        return manifest
+
+    def cleanup():
+        dirs = {e["dir"] for e in dv.values() if e is not None}
+        for d in dirs | ({data_dir} if data_dir is not None else set()):
+            shutil.rmtree(os.path.join(table, d), ignore_errors=True)
+
+    return _publish_with_rebase(
+        table, base, build_manifest,
+        rebase_ok=lambda nxt: _pruned_rebase_ok(
+            table, base, nxt, set(touched), probes
+        ),
+        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    )
 
 
 def snapshot_merge_update_pruned(
@@ -1556,113 +1782,24 @@ def snapshot_merge_update_pruned(
         raise ValueError(
             f"prune_col {prune_col!r} must be one of the merge keys {on}"
         )
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    bounds = updates.agg(
-        F.min(prune_col).alias("lo"),
-        F.max(prune_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.count(prune_col).alias("n_nonnull"),
-    ).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    update_empty = bounds["n"] == 0
+    latest = _require_latest(table)
     # min/max ignore NULLs, but merge_full/merge_update join with
-    # eqNullSafe (NULL keys MATCH NULL keys). A NULL-keyed update row
-    # is invisible to min/max pruning, so when any exist every file
-    # must be treated as potentially matched — pruning soundly
-    # degenerates to the full-read merge instead of silently dropping
-    # the NULL-keyed updates (or re-inserting them as duplicates).
-    nulls_in_updates = bounds["n"] > bounds["n_nonnull"]
-
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    # per-file bloom consultation for point-ish key sets: only pay
-    # the probe-key collection when at least one file carries a bloom
-    # on the prune column
-    probe_pairs = None
-    if not update_empty and any(prune_col in e for e in blooms.values()):
-        probe_pairs = _bloom_probe_pairs(updates, prune_col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(prune_col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), prune_col)
-
-    def file_nullcount(rel: str) -> int | None:
-        cached = cached_stats.get(rel, {}).get(prune_col)
-        if cached is not None and len(cached) >= 3:
-            return cached[2]  # may be None (unknown at commit time)
-        return _footer_nullcount(os.path.join(table, rel), prune_col)
-
-    touched: list[str] = []
-    inherited: list[str] = []
-    file_stats: dict = {}
-    for rel in files:
-        mm = file_minmax(rel)
-        nc = file_nullcount(rel)
-        if mm is not None:
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}),
-                    **{prune_col: [lo_e, hi_e, nc]},
-                )
-        if update_empty:  # empty update set: nothing can match
-            inherited.append(rel)
-            continue
-        # a file must be rewritten iff it MAY hold a matching row:
-        # (a) a non-NULL key inside the updates' non-NULL bounds —
-        #     unknown ranges (mm is None) count as possible; or
-        # (b) a NULL key while NULL-keyed updates exist (eqNullSafe
-        #     matches NULL to NULL; min/max never sees NULLs) —
-        #     unknown null counts (nc is None) count as possible.
-        may_match_nonnull = lo is not None and (
-            mm is None or not (mm[1] < lo or mm[0] > hi)
-        )
-        # bloom refinement: a file inside the range bounds may still
-        # provably hold NONE of the probed keys (false negatives are
-        # impossible, so skipping it is sound)
-        if may_match_nonnull and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(prune_col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may_match_nonnull = False
-        may_match_null = nulls_in_updates and (nc is None or nc > 0)
-        if may_match_nonnull or may_match_null:
-            touched.append(rel)
-        else:
-            inherited.append(rel)
-
-    data_dir: str | None = None
-    new_files: list[str] = []
+    # eqNullSafe (NULL keys MATCH NULL keys): the probe's NULL flag
+    # sends NULL-carrying files to the rewrite instead of silently
+    # dropping the NULL-keyed updates (or re-inserting duplicates)
+    n_updates, probes = _key_probes(updates, [prune_col], latest)
+    touched, _, stats = _prune_files(table, latest, probes)
+    merged = None
     # A write is needed when files must be rewritten, or when INSERT
-    # has unmatched rows to land (explicit emptiness check — `lo is
-    # None` also holds for a NON-empty all-NULL-key update set, which
-    # absolutely must be merged).
-    need_write = bool(touched) or (when_not_matched_insert and not update_empty)
-    parent_dv = latest.get("dv", {})
-    if need_write:
-        if touched:
-            # deletion vectors on touched files apply BEFORE the merge
-            # (a DV-deleted row is not in the table, so it must not
-            # match) — the rewrite then materializes them away.
-            tset = set(touched)
-            target = _scan_minus_dv(
-                spark,
-                table,
-                [os.path.join(table, r) for r in touched],
-                {r: e for r, e in parent_dv.items() if r in tset},
-                schema=_schema_for_read(spark, latest),
-            )
-        else:  # insert-only commit: nothing matched, nothing rewritten
-            target = spark.createDataFrame(
-                [], T.StructType.fromJson(latest["schema"])
-            )
+    # has unmatched rows to land (explicit emptiness check — an
+    # all-NULL-key update set has no bounds yet absolutely must be
+    # merged).
+    if touched or (when_not_matched_insert and n_updates):
+        # deletion vectors on touched files apply BEFORE the merge (a
+        # DV-deleted row is not in the table, so it must not match) —
+        # the rewrite then materializes them away. An insert-only
+        # commit (nothing touched) merges into an empty target.
+        target = _read_live(spark, table, latest, touched)
         if when_not_matched_insert:
             from exceldatatransform_py_spark.operators.merge import merge_full
 
@@ -1673,113 +1810,16 @@ def snapshot_merge_update_pruned(
             merged = merge_update(
                 target, updates, on=on, update_cols=update_cols
             )
-        # inherited CHECK constraints guard the rewritten rows (the
-        # inherited files were validated at their own commits)
-        _validate_constraints(merged, latest.get("constraints", {}))
-        # unique staging: collision-free under concurrency, so a
-        # rebase replays the SAME staged files at a later version
-        data_dir, staged_schema = _stage_unique(
-            table, merged, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-        # fresh stats for the rewritten files, so the NEXT merge on
-        # this column prunes from the manifest alone
-        file_stats.update(_collect_stats(table, new_files, [prune_col]))
-        for rel in touched:
-            file_stats.pop(rel, None)  # no longer part of the table
-    schema = staged_schema if need_write else latest["schema"]
-    import time as _t
-
-    new_rows = _collect_rows(table, new_files)
-    # keep the bloom index live across merges: rewritten files get
-    # fresh blooms whenever the parent carried any on this column
-    fresh_blooms = (
-        _collect_blooms(spark, table, new_files, [prune_col])
-        if new_files and any(prune_col in e for e in blooms.values())
-        else {}
-    )
-    touched_set = set(touched)
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        v = cur["version"] + 1
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(fresh_blooms)
-        # per-file stats: the winner's refreshed entries merged with
-        # the ones this merge computed (bytes are immutable, so both
-        # are valid; union per column)
-        stats_out: dict = {}
-        for r in inherited_cur:
-            st = dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            if st:
-                stats_out[r] = st
-        for r in new_files:
-            if r in file_stats:
-                stats_out[r] = file_stats[r]
-        manifest = {
-            "version": v,
-            # metadata-only commits (nothing rewritten) reference the
-            # parent's dir — the "files" list is authoritative anyway
-            "data_dir": data_dir if data_dir is not None else cur["data_dir"],
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            "kind": "merge_update_pruned",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": schema,
-            "stats": stats_out,
-            **({"blooms": blooms_out} if blooms_out else {}),
-            # inherited files keep their deletion vectors; touched
-            # files' DVs were applied during the read and are gone
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-            "pruning": {
-                "col": prune_col,
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-        }
-        return manifest
-
-    def cleanup():
-        if need_write:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-
-    # disjoint-commit resolution: a writer that loses the version race
-    # replays the SAME staged files onto the winner when the winner's
-    # commit provably didn't interact with ours (_pruned_rebase_ok).
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, prune_col,
-            lo, hi, nulls_in_updates, update_empty,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    # fresh stats (and, when the parent carried any on this column,
+    # blooms) for the rewritten files, so the NEXT merge on this
+    # column prunes from the manifest alone
+    return _commit_files(
+        spark, table, latest, "merge_update_pruned", df=merged,
+        touched=touched, rewrite=True, stats=stats,
+        stats_cols=[prune_col],
+        bloom_cols=[prune_col] if _has_bloom(latest, prune_col) else (),
+        cols=[prune_col], probes=probes, rebase=rebase,
+        max_rebase=max_rebase,
     )
 
 
@@ -1807,174 +1847,25 @@ def snapshot_delete_range(
     empty simply drops out) and commits a manifest. Rows that survive
     in rewritten files are preserved byte-exactly as data, and the
     commit inherits/enforces CHECK constraints like every other."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    # a POINT delete (lo == hi) consults per-file blooms: on an
-    # unclustered key every file's min/max range covers the key, but
-    # the bloom rules out files that provably don't hold it
-    probe_pairs = None
-    if lo == hi and any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, latest, col, [lo])
-        if pf is not None:
-            probe_pairs = _bloom_probe_pairs(pf, col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), col)
-
-    touched: list[str] = []
-    inherited: list[str] = []
-    file_stats: dict = {}
-    for rel in files:
-        mm = file_minmax(rel)
-        if mm is not None:
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                cached = cached_stats.get(rel, {}).get(col)
-                nc = (
-                    cached[2] if cached is not None and len(cached) >= 3
-                    else _footer_nullcount(os.path.join(table, rel), col)
-                )
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}), **{col: [lo_e, hi_e, nc]}
-                )
-        if mm is None:  # no stats: may hold matches — rewrite
-            may = True
-        else:
-            fmin, fmax = mm
-            may = not (fmax < lo or fmin > hi)
-        if may and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may = False
-        (touched if may else inherited).append(rel)
-
-    parent_dv = latest.get("dv", {})
-    data_dir: str | None = None
-    new_files: list[str] = []
+    latest = _require_latest(table)
+    probes = _range_probes(spark, latest, col, lo, hi)
+    touched, _, stats = _prune_files(table, latest, probes)
+    kept = None
     if touched:
         # rows already DV-deleted must not re-enter the rewrite
-        tset = set(touched)
-        target = _scan_minus_dv(
-            spark,
-            table,
-            [os.path.join(table, r) for r in touched],
-            {r: e for r, e in parent_dv.items() if r in tset},
-            schema=_schema_for_read(spark, latest),
+        kept = _read_live(spark, table, latest, touched).filter(
+            ~_delete_predicate(col, lo, hi, extra_predicate)
         )
-        doomed = F.col(col).between(F.lit(lo), F.lit(hi))
-        if extra_predicate is not None:
-            doomed = doomed & F.coalesce(
-                F.expr(extra_predicate), F.lit(False)
-            )
-        kept = target.filter(~F.coalesce(doomed, F.lit(False)))
-        _validate_constraints(kept, latest.get("constraints", {}))
-        # unique staging: collision-free under concurrency, so a
-        # conflicted delete can rebase its staged files verbatim
-        data_dir, _ = _stage_unique(
-            table, kept, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-        file_stats.update(_collect_stats(table, new_files, [col]))
-        for rel in touched:
-            file_stats.pop(rel, None)
-    import time as _t
-
-    fresh_blooms = (
-        _collect_blooms(spark, table, new_files, [col])
-        if new_files and any(col in e for e in blooms.values())
-        else {}
-    )
-    new_rows = _collect_rows(table, new_files)
-    touched_set = set(touched)
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(fresh_blooms)
-        stats_out: dict = {}
-        for r in inherited_cur:
-            st = dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            if st:
-                stats_out[r] = st
-        for r in new_files:
-            if r in file_stats:
-                stats_out[r] = file_stats[r]
-        return {
-            "version": cur["version"] + 1,
-            "data_dir": (
-                data_dir if data_dir is not None else cur["data_dir"]
-            ),
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            **({"blooms": blooms_out} if blooms_out else {}),
-            "kind": "delete_range",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            "stats": stats_out,
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            "pruning": {
-                "col": col,
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-        }
-
-    def cleanup():
-        if data_dir is not None:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-
     # disjoint-commit resolution: the delete replays onto a winner
     # that (a) left every file it rewrote intact with identical DVs
     # and (b) added no file that may hold keys in [lo, hi] — a
     # winner-inserted row in the delete range would have needed this
-    # delete, so that race conflicts deterministically. NULL keys
-    # never match a BETWEEN, so the NULL-side test is moot
-    # (nulls_in_updates=False); update_empty=False keeps the
-    # winner-added-file check live even for a no-op delete.
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, col,
-            lo, hi, False, False,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    # delete, so that race conflicts deterministically.
+    return _commit_files(
+        spark, table, latest, "delete_range", df=kept, touched=touched,
+        rewrite=True, stats=stats, stats_cols=[col],
+        bloom_cols=[col] if _has_bloom(latest, col) else (),
+        cols=[col], probes=probes, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -2011,168 +1902,12 @@ def snapshot_delete_dv(
     get ONE fresh sidecar holding old ∪ new positions (exact
     cardinalities, no double counting); untouched files inherit their
     parent entries by reference."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    cached_stats = latest.get("stats", {})
-    parent_dv = latest.get("dv", {})
-    blooms = latest.get("blooms", {})
-    probe_pairs = None
-    if lo == hi and any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, latest, col, [lo])
-        if pf is not None:
-            probe_pairs = _bloom_probe_pairs(pf, col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), col)
-
-    touched: list[str] = []
-    file_stats: dict = dict(cached_stats)
-    for rel in files:
-        mm = file_minmax(rel)
-        if mm is not None and col not in cached_stats.get(rel, {}):
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                nc = _footer_nullcount(os.path.join(table, rel), col)
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}), **{col: [lo_e, hi_e, nc]}
-                )
-        may = mm is None or not (mm[1] < lo or mm[0] > hi)
-        if may and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may = False
-        if may:
-            touched.append(rel)
-
-    v = latest["version"] + 1
-    import time as _t
-
-    new_dv = dict(parent_dv)
-    dv_dir: str | None = None
-    n_dv_files = 0
-    if touched:
-        # positions to delete, computed ONLY over overlapping files;
-        # parent DV rows for those files are folded in (union) so the
-        # fresh sidecar is each touched file's COMPLETE deletion
-        # vector and cardinalities never double-count.
-        doomed = F.col(col).between(F.lit(lo), F.lit(hi))
-        if extra_predicate is not None:
-            doomed = doomed & F.coalesce(
-                F.expr(extra_predicate), F.lit(False)
-            )
-        _rs = _schema_for_read(spark, latest)
-        scan = (
-            spark.read.schema(_rs) if _rs is not None else spark.read
-        ).parquet(*[os.path.join(table, r) for r in touched])
-        hits = (
-            scan.withColumn("rel", _rel_file_expr())
-            .withColumn("pos", F.col("_metadata.row_index"))
-            .filter(F.coalesce(doomed, F.lit(False)))
-            .select("rel", "pos")
-        )
-        old = {r: e for r, e in parent_dv.items() if r in set(touched)}
-        old_rows = _dv_rows(spark, table, old)
-        if old_rows is not None:
-            tset = list(old)
-            prior = old_rows.filter(F.col("rel").isin(tset))
-            merged = hits.join(
-                prior, ["rel", "pos"], "left_anti"
-            ).unionByName(prior)
-        else:
-            merged = hits
-        counts = {
-            r["rel"]: int(r["n"])
-            for r in merged.groupBy("rel")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        total = sum(counts.values())
-        if counts:
-            dv_dir = os.path.join(
-                _DVDIR, f"v{v:05d}-{uuid.uuid4().hex[:8]}"
-            )
-            n_out = max(1, total // 4_000_000)
-            merged.repartition(n_out, "rel").write.mode(
-                "errorifexists"
-            ).parquet(os.path.join(table, dv_dir))
-            for rel in touched:
-                if rel in counts:
-                    new_dv[rel] = {"dir": dv_dir, "count": counts[rel]}
-                else:
-                    new_dv.pop(rel, None)
-            n_dv_files = sum(1 for rel in touched if rel in counts)
-
-    # per-touched-file DV outcome (None = entry removed): applied on
-    # top of whichever parent the commit finally lands on — sound
-    # because the rebase check requires the winner to have left every
-    # touched file's bytes AND its DV entry exactly as we read them.
-    touched_set = set(touched)
-    dv_touched = {rel: new_dv.get(rel) for rel in touched}
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        cur_files = _manifest_files(table, cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_blooms = cur.get("blooms", {})
-        dv_out = dict(cur.get("dv", {}))
-        for rel, entry in dv_touched.items():
-            if entry is None:
-                dv_out.pop(rel, None)
-            else:
-                dv_out[rel] = entry
-        stats_out = {
-            r: dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            for r in cur_files
-            if cur_stats.get(r) or file_stats.get(r)
-        }
-        manifest = {
-            "version": cur["version"] + 1,
-            "data_dir": cur["data_dir"],
-            "files": list(cur_files),
-            "rows": {
-                r: cur_rows[r]
-                if r in cur_rows
-                else _footer_rows(os.path.join(table, r))
-                for r in cur_files
-            },
-            "kind": "delete_dv",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            "stats": stats_out,
-            # blooms stay valid as supersets after a merge-on-read
-            # delete
-            **({"blooms": cur_blooms} if cur_blooms else {}),
-            "pruning": {
-                "col": col,
-                "rewritten_files": 0,
-                "dv_files": n_dv_files,
-                "scanned_files": len(touched),
-                "inherited_files": len(cur_files) - len(touched),
-                **({"rebased": attempts} if attempts else {}),
-            },
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-        }
-        if dv_out:
-            manifest["dv"] = dv_out
-        return manifest
-
-    def cleanup():
-        if dv_dir is not None:
-            shutil.rmtree(os.path.join(table, dv_dir), ignore_errors=True)
-
+    latest = _require_latest(table)
+    probes = _range_probes(spark, latest, col, lo, hi)
+    touched, _, stats = _prune_files(table, latest, probes)
+    # positions to delete, computed ONLY over overlapping files
+    pred = _delete_predicate(col, lo, hi, extra_predicate)
+    dv = _write_dv(spark, table, latest, touched, lambda s: s.filter(pred))
     # disjoint-commit resolution: two concurrent DV deletes (or a DV
     # delete racing a pruned merge) both commit when the winner (a)
     # kept every file this delete scanned, bytes and DV entry intact
@@ -2181,14 +1916,12 @@ def snapshot_delete_dv(
     # — and (b) added no file that may hold keys in [lo, hi] (a
     # winner-inserted row in the delete range would have needed this
     # delete). Files the winner touched that we only INHERIT are fine:
-    # dv_out starts from the winner's map.
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, col,
-            lo, hi, False, False,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    # the deletion vectors start from the winner's map. Blooms stay
+    # valid as supersets after a merge-on-read delete.
+    return _commit_files(
+        spark, table, latest, "delete_dv", touched=touched, dv=dv,
+        stats=stats, cols=[col], probes=probes,
+        rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -2307,10 +2040,7 @@ def snapshot_rename_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
+    latest = _require_latest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if old not in names:
         raise ValueError(f"column {old!r} not in {names}")
@@ -2379,10 +2109,7 @@ def snapshot_drop_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
+    latest = _require_latest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if col not in names:
         raise ValueError(f"column {col!r} not in {names}")
@@ -2735,9 +2462,10 @@ def _apply_cdc_version(
     txn: tuple[str, int],
     max_retries: int = 5,
 ) -> int:
-    """Apply ONE source version's change feed to a replica as ONE
-    commit (kind ``cdc_apply``) whose physical cost is O(changed
-    rows), never O(replica):
+    """Apply the change feed of one source version — or of one fold
+    window of consecutive versions — to a replica as ONE commit (kind
+    ``cdc_apply``) whose physical cost is O(changed rows), never
+    O(replica):
 
     * ``dels`` (distinct key tuples) land as DELETION VECTORS on only
       the files whose cached min/max stats / blooms say they may hold
@@ -2751,9 +2479,9 @@ def _apply_cdc_version(
       source schema widens the replica here — new columns mint fresh
       field ids and pre-widen files NULL-fill, exactly like a local
       widening commit;
-    * one manifest = one source version = one ``txn`` ledger entry,
-      so the exactly-once cursor contract is unchanged (a crash
-      between two half-applied commits cannot exist).
+    * one manifest = one ``txn`` ledger entry (the last source version
+      it covers), so the exactly-once cursor contract is unchanged (a
+      crash between two half-applied commits cannot exist).
 
     Concurrency: a concurrent writer on the REPLICA (local append,
     delete, compaction) losing/winning the version race no longer
@@ -2791,77 +2519,15 @@ def _apply_cdc_version_once(
 ) -> int:
     """One publish attempt of ``_apply_cdc_version`` against the
     current latest manifest (see there for semantics)."""
-    import time as _t
-
-    latest = _latest_manifest(table)
-    if latest is None:
-        raise FileNotFoundError(f"no versions in {table}")
-    files = _manifest_files(table, latest)
-    parent_dv = latest.get("dv", {})
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    prune_col = keys[0]
-
-    # ---- deletes → consolidated deletion vectors on pruned files ----
-    new_dv = dict(parent_dv)
-    dv_dir: str | None = None
-    n_dv_files = 0
+    latest = _require_latest(table)
+    # deletes → consolidated deletion vectors on the files no
+    # replication key's stats or bloom exclude
     touched: list[str] = []
+    stats: dict = {}
+    dv: dict = {}
     if dels is not None:
-        # one aggregation pass over the delete keys: min/max/non-null
-        # count for EVERY key, so per-file exclusion can intersect
-        # across keys
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for j, k in enumerate(keys):
-            aggs += [
-                F.min(k).alias(f"lo{j}"),
-                F.max(k).alias(f"hi{j}"),
-                F.count(k).alias(f"nn{j}"),
-            ]
-        bounds = dels.agg(*aggs).first()
-        probe_pairs = {}
-        for k in keys:
-            if any(k in e for e in blooms.values()):
-                pp = _bloom_probe_pairs(dels, k)
-                if pp is not None:  # None = over cap, range-only
-                    probe_pairs[k] = pp
-        for rel in files:
-            may = True
-            for j, k in enumerate(keys):
-                cached = cached_stats.get(rel, {}).get(k)
-                if cached is not None:
-                    mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
-                    nc = cached[2] if len(cached) >= 3 else None
-                elif j == 0:
-                    # only the primary key pays a footer read when the
-                    # manifest has no cached stats; a secondary key
-                    # without cached stats simply cannot exclude
-                    mm = _footer_minmax(os.path.join(table, rel), k)
-                    nc = _footer_nullcount(os.path.join(table, rel), k)
-                else:
-                    continue
-                lo, hi = bounds[f"lo{j}"], bounds[f"hi{j}"]
-                nulls_k = bounds["n"] > bounds[f"nn{j}"]
-                may_nonnull = lo is not None and (
-                    mm is None or not (mm[1] < lo or mm[0] > hi)
-                )
-                if may_nonnull and k in probe_pairs:
-                    hexmap = blooms.get(rel, {}).get(k)
-                    if hexmap is not None and not _bloom_may_contain(
-                        hexmap, probe_pairs[k]
-                    ):
-                        may_nonnull = False
-                may_null = nulls_k and (nc is None or nc > 0)
-                if not (may_nonnull or may_null):
-                    may = False
-                    break
-            if may:
-                touched.append(rel)
-    if touched:
-        _rs = _schema_for_read(spark, latest)
-        scan = (
-            spark.read.schema(_rs) if _rs is not None else spark.read
-        ).parquet(*[os.path.join(table, r) for r in touched])
+        _, probes = _key_probes(dels, keys, latest)
+        touched, _, stats = _prune_files(table, latest, probes)
         d = dels.select(
             *[F.col(k).alias(f"__del_{k}") for k in keys]
         ).dropDuplicates()
@@ -2869,120 +2535,20 @@ def _apply_cdc_version_once(
         for k in keys:
             c = F.col(k).eqNullSafe(F.col(f"__del_{k}"))
             cond = c if cond is None else cond & c
-        hits = (
-            scan.withColumn("rel", _rel_file_expr())
-            .withColumn("pos", F.col("_metadata.row_index"))
-            .join(d, cond, "left_semi")
-            .select("rel", "pos")
+        dv = _write_dv(
+            spark, table, latest, touched,
+            lambda s: s.join(d, cond, "left_semi"),
         )
-        # fold in prior positions so each touched file's fresh sidecar
-        # is its COMPLETE deletion vector (no double counting)
-        old = {r: e for r, e in parent_dv.items() if r in set(touched)}
-        old_rows = _dv_rows(spark, table, old)
-        if old_rows is not None:
-            prior = old_rows.filter(F.col("rel").isin(list(old)))
-            merged = hits.join(
-                prior, ["rel", "pos"], "left_anti"
-            ).unionByName(prior)
-        else:
-            merged = hits
-        counts = {
-            r["rel"]: int(r["n"])
-            for r in merged.groupBy("rel")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if counts:
-            dv_dir = os.path.join(
-                _DVDIR, f"v{latest['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
-            )
-            n_out = max(1, sum(counts.values()) // 4_000_000)
-            merged.repartition(n_out, "rel").write.mode(
-                "errorifexists"
-            ).parquet(os.path.join(table, dv_dir))
-            for rel in touched:
-                if rel in counts:
-                    new_dv[rel] = {"dir": dv_dir, "count": counts[rel]}
-                else:
-                    new_dv.pop(rel, None)
-            n_dv_files = sum(1 for rel in touched if rel in counts)
-
-    # ---- inserts → appended files (schema may widen) ----
-    data_dir: str | None = None
-    new_files: list[str] = []
-    schema = latest["schema"]
-    if ins is not None:
-        _validate_constraints(ins, latest.get("constraints", {}))
-        data_dir, schema = _stage_unique(
-            table, ins, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-
-    stats_out = dict(cached_stats)
-    if new_files:
-        # stats for EVERY replication key, so later drains can
-        # intersect exclusions across the composite key
-        stats_out.update(_collect_stats(table, new_files, list(keys)))
-    blooms_out = dict(blooms)
-    bloom_keys = [
-        k for k in keys if any(k in e for e in blooms.values())
-    ]
-    if new_files and bloom_keys:
-        blooms_out.update(
-            _collect_blooms(spark, table, new_files, bloom_keys)
-        )
-    rows_map = latest.get("rows", {})
-    manifest = {
-        "version": latest["version"] + 1,
-        "data_dir": data_dir if data_dir is not None else latest["data_dir"],
-        "files": new_files + list(files),
-        "rows": {
-            **{
-                r: rows_map[r]
-                if r in rows_map
-                else _footer_rows(os.path.join(table, r))
-                for r in files
-            },
-            **_collect_rows(table, new_files),
-        },
-        "kind": "cdc_apply",
-        "parent": latest["version"],
-        "ts": _t.time(),
-        "schema": schema,
-        "stats": stats_out,
-        **({"blooms": blooms_out} if blooms_out else {}),
-        "txn": {"app": txn[0], "batch": int(txn[1])},
-        "pruning": {
-            "col": prune_col,
-            "cols": list(keys),
-            "rewritten_files": 0,
-            "appended_files": len(new_files),
-            "dv_files": n_dv_files,
-            "scanned_files": len(touched),
-            "inherited_files": len(files),
-        },
-        **(
-            {"constraints": latest["constraints"]}
-            if latest.get("constraints")
-            else {}
-        ),
-    }
-    if new_dv:
-        manifest["dv"] = new_dv
-    _record_last_field_id(manifest, _last_field_id(table, latest))
-    try:
-        _publish(table, manifest)
-    except SnapshotConflictError:
-        if data_dir is not None:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-        if dv_dir is not None:
-            shutil.rmtree(os.path.join(table, dv_dir), ignore_errors=True)
-        raise
-    return manifest["version"]
+    # inserts → appended files (the staged schema may widen), with
+    # stats for EVERY replication key so later drains can intersect
+    # exclusions across the composite key. The retry loop lives in
+    # _apply_cdc_version, so a lost race re-raises here.
+    return _commit_files(
+        spark, table, latest, "cdc_apply", df=ins, touched=touched,
+        dv=dv, stats=stats, stats_cols=list(keys),
+        bloom_cols=[k for k in keys if _has_bloom(latest, k)],
+        cols=list(keys), txn=txn, rebase=False,
+    )
 
 
 def replicate_snapshot_changes(
@@ -3003,13 +2569,12 @@ def replicate_snapshot_changes(
       no side files, and a crashed/replayed application of an
       already-applied version is a no-op by the ledger's ``<= max``
       rule;
-    * versions apply ONE AT A TIME as ONE ``cdc_apply`` commit each
-      (``_apply_cdc_version``): deletes become deletion vectors on
-      the pruned files, inserts become appended files, every other
-      file is inherited BY REFERENCE — O(changed rows) per source
-      version, never a replica rewrite. A key updated in two
-      consecutive source versions still sees its delete/insert pairs
-      in order, because versions are never folded;
+    * row-change versions apply as ``cdc_apply`` commits
+      (``_apply_cdc_version``) — by default a run of consecutive ones
+      folds into ONE commit (``fold_versions`` below): deletes become
+      deletion vectors on the pruned files, inserts become appended
+      files, every other file is inherited BY REFERENCE — O(changed
+      rows) per commit, never a replica rewrite;
     * SCHEMA commits replay as schema commits: a source
       ``rename_column``/``drop_column`` runs the same metadata-only
       commit on the replica (the feed is empty — without the replay,
@@ -3337,8 +2902,12 @@ def vacuum(
 
 def snapshot_history(table: str) -> list[dict]:
     """The audit log (DESCRIBE HISTORY analogue): one entry per
-    version — kind, parent, file count, whether stats are cached —
-    from manifests only (no data reads)."""
+    version — kind, parent, file count, whether stats are cached and,
+    for file-level commits, the commit record ``pruning`` (files
+    scanned, rewritten, inherited, given a deletion vector and
+    appended, and how often the commit rebased; None for whole-version
+    and metadata-only commits) — from manifests only (no data
+    reads)."""
     out = []
     for m in _manifests(table):
         out.append(
@@ -3350,6 +2919,7 @@ def snapshot_history(table: str) -> list[dict]:
                 "n_files": len(_manifest_files(table, m)),
                 "has_stats": bool(m.get("stats")),
                 "n_dv_files": len(m.get("dv", {})),
+                "pruning": m.get("pruning"),
             }
         )
     return out

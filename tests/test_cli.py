@@ -452,7 +452,9 @@ def test_cli_audio_index_loop(spark, tmp_path):
 def test_cli_snapshot_replicate_loop(spark, tmp_path):
     """CDC replication through the CLI: two `snapshot replicate` calls
     bracket fresh source commits; each drains what exists, replays are
-    no-ops, and the replica tracks the source row-for-row."""
+    no-ops, and the replica tracks the source row-for-row. Without
+    --fold-versions the CLI folds like the library does: the first
+    drain lands its two row-change versions as ONE cdc_apply."""
     from exceldatatransform_py_spark.cli import main
     from exceldatatransform_py_spark.sources import snapshots as snap
 
@@ -466,10 +468,14 @@ def test_cli_snapshot_replicate_loop(spark, tmp_path):
         stats_cols=["k"],
     )
     snap.snapshot_delete_dv(spark, src, "k", 10, 19)
+    snap.snapshot_delete_dv(spark, src, "k", 40, 44)
     main(["snapshot", "replicate", "--table", src,
           "--replica", dst, "--keys", "k"])
     assert sorted(tuple(r) for r in snap.snapshot_read(spark, dst).collect()) \
         == sorted(tuple(r) for r in snap.snapshot_read(spark, src).collect())
+    assert [m["kind"] for m in snap._manifests(dst)] == [
+        "overwrite", "cdc_apply",
+    ]
     snap.snapshot_merge_update_pruned(
         spark, src,
         spark.createDataFrame([(500, 5.0)], "k long, x double"),
@@ -479,7 +485,7 @@ def test_cli_snapshot_replicate_loop(spark, tmp_path):
           "--replica", dst, "--keys", "k"])
     assert sorted(tuple(r) for r in snap.snapshot_read(spark, dst).collect()) \
         == sorted(tuple(r) for r in snap.snapshot_read(spark, src).collect())
-    assert snap.last_committed_txn(dst, "cdf-replica") == 2
+    assert snap.last_committed_txn(dst, "cdf-replica") == 3
 
 
 def test_cli_snapshot_alter_check(spark, tmp_path, capsys):

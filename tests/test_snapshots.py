@@ -373,6 +373,7 @@ def test_snapshot_history_and_schema_evolution(spark, table):
     """History is manifest-only metadata; schema evolution is free —
     each version reads with the schema it was written with."""
     from exceldatatransform_py_spark.sources.snapshots import (
+        snapshot_delete_dv,
         snapshot_history,
         snapshot_merge_update_pruned,
     )
@@ -399,6 +400,29 @@ def test_snapshot_history_and_schema_evolution(spark, table):
     assert snapshot_read(spark, table, 1).columns == ["k", "x", "tag"]
     got = {r.k: (r.x, r.tag) for r in snapshot_read(spark, table).collect()}
     assert got == {1: (1.0, "a"), 2: (-2.0, "b")}
+
+    # every file-level commit carries the same commit record, and the
+    # history surfaces it (None for whole-version commits)
+    snapshot_delete_dv(spark, table, "k", 1, 1)
+    hist = snapshot_history(table)
+    assert hist[0]["pruning"] is None and hist[1]["pruning"] is None
+    fields = {
+        "scanned_files", "rewritten_files", "inherited_files",
+        "dv_files", "appended_files", "rebased",
+    }
+    merge, dele = hist[2]["pruning"], hist[3]["pruning"]
+    assert fields <= set(merge) and fields <= set(dele)
+    assert merge["scanned_files"] == merge["rewritten_files"] >= 1
+    assert (
+        merge["inherited_files"] + merge["appended_files"]
+        == hist[2]["n_files"]
+    )
+    assert (merge["dv_files"], merge["rebased"]) == (0, 0)
+    assert dele["scanned_files"] >= dele["dv_files"] == 1
+    assert (dele["rewritten_files"], dele["appended_files"]) == (0, 0)
+    assert (
+        dele["inherited_files"] + dele["scanned_files"] == hist[3]["n_files"]
+    )
 
 
 def test_concurrent_commit_loser_detects_conflict(spark, table):
@@ -3604,7 +3628,9 @@ def test_replicate_folded_drain_matches_one_at_a_time(
 def test_replicate_fold_stops_at_schema_commit(spark, table, tmp_path):
     """A fold window must end BEFORE a rename/drop/constraint commit —
     the schema commit replays individually and the drain continues
-    folding after it."""
+    folding after it. A row-change commit that WIDENS the schema ends
+    the window too (its schema signature differs): it replays as its
+    own cdc_apply between the folds."""
     from exceldatatransform_py_spark.sources import snapshots as snap
 
     src, dst = table, str(tmp_path / "replica")
@@ -3621,8 +3647,15 @@ def test_replicate_fold_stops_at_schema_commit(spark, table, tmp_path):
             spark.createDataFrame([(i, float(50 + i))], "k long, x double"),
             on=["k"], update_cols=["x"],
         )
-    snap.snapshot_rename_column(src, "x", "amount")            # v4
-    for i in range(3):                                         # v5..v7
+    snap.snapshot_merge_update(                                # v4
+        spark, src,
+        spark.createDataFrame(
+            [(3, 60.0, "w")], "k long, x double, tag string"
+        ),
+        on=["k"], update_cols=["x", "tag"], evolve_schema=True,
+    )
+    snap.snapshot_rename_column(src, "x", "amount")            # v5
+    for i in range(3):                                         # v6..v8
         snap.snapshot_merge_update_pruned(
             spark, src,
             spark.createDataFrame(
@@ -3632,10 +3665,13 @@ def test_replicate_fold_stops_at_schema_commit(spark, table, tmp_path):
         )
     assert snap.replicate_snapshot_changes(
         spark, src, dst, keys=["k"], fold_versions=100
-    ) == 8
+    ) == 9
     assert _rows(snap.snapshot_read(spark, dst)) == _rows(
         snap.snapshot_read(spark, src)
     )
-    kinds = [m["kind"] for m in snap._manifests(dst)]
-    # bootstrap + fold(v1-3) + rename + fold(v5-7)
-    assert kinds == ["overwrite", "cdc_apply", "rename_column", "cdc_apply"]
+    ms = snap._manifests(dst)
+    # bootstrap + fold(v1-3) + widening v4 alone + rename + fold(v6-8)
+    assert [m["kind"] for m in ms] == [
+        "overwrite", "cdc_apply", "cdc_apply", "rename_column", "cdc_apply",
+    ]
+    assert [m["txn"]["batch"] for m in ms] == [0, 3, 4, 5, 8]
